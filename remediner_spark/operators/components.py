@@ -262,7 +262,7 @@ LEFT JOIN comp c ON c.doc_id = d.doc_id
 LEFT JOIN keeper k ON k.component = c.component"""
 
 
-# ---- fixed-point PageRank over the near-dup graph -------------------
+# ---- fixed-point PageRank (every variant in the repo) ---------------
 #
 # Iterative rank propagation is the second classic iterative graph
 # primitive after components. Floating-point PageRank is NOT
@@ -280,40 +280,128 @@ PR_BASE = (15 * PR_SCALE) // 100
 
 
 def pagerank_fixed_point(
-    edges: DataFrame, iters: int = PR_ITERS
+    edges: DataFrame, iters: int = PR_ITERS, dangling: bool = False
 ) -> DataFrame:
-    """edges(src, dst) -> (node, rank_fp): integer fixed-point
-    PageRank after `iters` rounds, damping 0.85, start rank PR_SCALE."""
+    """edges(src, dst[, w]) -> (node, rank_fp): integer fixed-point
+    PageRank after `iters` rounds, damping 0.85, start rank PR_SCALE.
+
+    Weighting comes from the input. With an INTEGER `w` column each
+    edge carries r * w div deg, deg = sum(w) over its source; without
+    one each row carries r div deg, deg = count, so duplicate rows act
+    as multiplicity. The two agree at w = 1; at w > 1 they do not
+    (r * w div deg rounds once where w duplicate rows round w times).
+    Folding multiplicity into w first keeps each round's shuffle at
+    distinct-edge grain — the form for dense sites and host graphs.
+
+    dangling=True ranks the FULL node set src ∪ dst and recycles sink
+    mass: a node with no outlinks (an asset URL, an uncrawled target,
+    a host only ever linked to) donates its rank equally to every node
+    each round. The sink sum D is a 1-row agg broadcast into the
+    update and each node receives D div N (remainder dropped, mirrored
+    in SQL), so rounds stay cross-engine exact. Without it only
+    sources rank and mass sent to sinks leaves the system."""
+    weighted = "w" in edges.columns
     edges = edges.localCheckpoint()
     # the node set is a loop constant: checkpoint it once instead of
     # re-running the distinct from the edge checkpoint in every
     # round's plan (pre-joining deg into the edge list was also tried:
     # the extra edge-grain materialization cost more than the cheap
     # per-round broadcast deg join it replaced)
-    nodes = (
-        edges.select(F.col("src").alias("node")).distinct().localCheckpoint()
+    nodes = edges.select(F.col("src").alias("node"))
+    if dangling:
+        nodes = nodes.unionAll(edges.select(F.col("dst").alias("node")))
+    nodes = nodes.distinct().localCheckpoint()
+    deg = edges.groupBy("src").agg(
+        (F.sum("w") if weighted else F.count(F.lit(1))).alias("deg")
     )
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
+    contribution = F.expr("r * w div deg" if weighted else "r div deg")
+    update = "85 * coalesce(s, 0)"
+    if dangling:
+        n_nodes = nodes.count()  # plan constant (1 driver scalar)
+        sinks = nodes.join(
+            edges.select("src").distinct(),
+            nodes["node"] == F.col("src"),
+            "left_anti",
+        )
+        update = f"85 * (coalesce(s, 0) + _d div {n_nodes})"
     ranks = nodes.withColumn("r", F.lit(PR_SCALE).cast("long"))
     for _ in range(iters):
         contrib = (
             edges.join(ranks, edges["src"] == ranks["node"])
             .join(deg, "src")
-            .select(F.col("dst"), F.expr("r div deg").alias("c"))
+            .select(F.col("dst"), contribution.alias("c"))
         )
         summed = contrib.groupBy("dst").agg(F.sum("c").alias("s"))
+        nxt = nodes.join(summed, nodes["node"] == summed["dst"], "left")
+        if dangling:
+            nxt = nxt.crossJoin(F.broadcast(
+                ranks.join(sinks.select("node"), "node", "left_semi")
+                .agg(F.coalesce(F.sum("r"), F.lit(0)).alias("_d"))
+            ))
         ranks = (
-            nodes.join(summed, nodes["node"] == summed["dst"], "left")
-            .select(
+            nxt.select(
                 "node",
-                (
-                    F.lit(PR_BASE)
-                    + F.expr("(85 * coalesce(s, 0)) div 100")
-                ).cast("long").alias("r"),
+                (F.lit(PR_BASE) + F.expr(f"({update}) div 100"))
+                .cast("long").alias("r"),
             )
             .localCheckpoint()  # truncate lineage per round
         )
     return ranks.select("node", F.col("r").alias("rank_fp"))
+
+
+def sql_pagerank_ctes(
+    edges: str = "edges", weighted: bool = False, dangling: bool = False
+) -> str:
+    """The DuckDB mirror of pagerank_fixed_point: nodes, [nn], the
+    out-degree CTE and r0 .. r{PR_ITERS} over the relation `edges`
+    (src, dst[, w]); the final ranks are r{PR_ITERS}(node, r).
+    Aggregation is not allowed inside a recursive CTE term, so the
+    rounds are unrolled."""
+    if dangling:
+        nodes = f"""nodes AS (
+  SELECT DISTINCT node FROM (
+    SELECT src AS node FROM {edges} UNION ALL SELECT dst FROM {edges})),
+nn AS (SELECT count(*) AS n FROM nodes)"""
+    else:
+        nodes = f"nodes AS (SELECT DISTINCT src AS node FROM {edges})"
+    # out-degree CTE, its degree column and aggregate, the weight factor
+    od, deg, agg, w = (
+        ("ow", "ow", "CAST(sum(w) AS BIGINT)", " * e.w")
+        if weighted
+        else ("od", "deg", "count(*)", "")
+    )
+    # the layout below is part of every PageRank oracle's text, which
+    # is pinned byte for byte: change it only together with the oracles
+    steps = []
+    for i in range(PR_ITERS):
+        s = f"coalesce(s{i + 1}.s, 0)"
+        if dangling:
+            sink = f"""
+d{i} AS (
+  SELECT coalesce(sum(r), 0) AS d FROM r{i}
+  WHERE NOT EXISTS (SELECT 1 FROM {od} WHERE {od}.src = r{i}.node)),"""
+            update = f"""(85 * ({s}
+                + (SELECT d FROM d{i}) // (SELECT n FROM nn)))
+              // 100 AS BIGINT) AS r"""
+        else:
+            sink = ""
+            update = f"""(85 * {s}) // 100 AS BIGINT)
+           AS r"""
+        steps.append(f"""{sink}
+s{i + 1} AS (
+  SELECT e.dst, sum(r{i}.r{w} // {od}.{deg}) AS s
+  FROM {edges} e
+  JOIN r{i} ON r{i}.node = e.src
+  JOIN {od} ON {od}.src = e.src
+  GROUP BY e.dst),
+r{i + 1} AS (
+  SELECT n.node,
+         CAST({PR_BASE} + {update}
+  FROM nodes n LEFT JOIN s{i + 1} ON s{i + 1}.dst = n.node)""")
+    return f"""{nodes},
+{od} AS (SELECT src, {agg} AS {deg} FROM {edges} GROUP BY src),
+r0 AS (SELECT node, CAST({PR_SCALE} AS BIGINT) AS r FROM nodes),
+{",".join(steps)}"""
 
 
 def q_graph_pagerank(spark, sf_dir: str) -> DataFrame:
@@ -333,30 +421,13 @@ def q_graph_pagerank(spark, sf_dir: str) -> DataFrame:
 def sql_graph_pagerank() -> str:
     from .dedup import sql_jaccard_ctes
 
-    steps = []
-    for i in range(PR_ITERS):
-        steps.append(f"""
-s{i + 1} AS (
-  SELECT e.dst, sum(r{i}.r // od.deg) AS s
-  FROM edges e
-  JOIN r{i} ON r{i}.node = e.src
-  JOIN od ON od.src = e.src
-  GROUP BY e.dst),
-r{i + 1} AS (
-  SELECT n.node,
-         CAST({PR_BASE} + (85 * coalesce(s{i + 1}.s, 0)) // 100 AS BIGINT)
-           AS r
-  FROM nodes n LEFT JOIN s{i + 1} ON s{i + 1}.dst = n.node)""")
     return f"""
 WITH {sql_jaccard_ctes()},
 edges AS (
   SELECT doc_a AS src, doc_b AS dst FROM jpairs
   UNION ALL
   SELECT doc_b, doc_a FROM jpairs),
-nodes AS (SELECT DISTINCT src AS node FROM edges),
-od AS (SELECT src, count(*) AS deg FROM edges GROUP BY src),
-r0 AS (SELECT node, CAST({PR_SCALE} AS BIGINT) AS r FROM nodes),
-{",".join(steps)}
+{sql_pagerank_ctes()}
 SELECT node AS doc_id, r AS rank_fp FROM r{PR_ITERS}"""
 
 

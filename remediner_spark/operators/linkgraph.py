@@ -12,21 +12,33 @@ Scale shape at 10^12 docs:
   column inside whole-stage codegen, no Python hop, map-only;
 * edge aggregation shuffles on (src, dst) with map-side partial
   counts — edge-grain, the unavoidable minimum;
-* PageRank reuses components.pagerank_fixed_point: integer fixed-point
-  arithmetic (cross-engine exact), per-round localCheckpoint lineage
-  truncation, join-on-src + groupBy-dst rounds — O(E) per round.
+* every PageRank here (page, weighted, dangling, host) is the one body
+  components.pagerank_fixed_point — weighted when the edge frame
+  carries an integer `w`, dangling=True for src ∪ dst with sink-mass
+  recycling: integer fixed-point arithmetic (cross-engine exact),
+  per-round localCheckpoint lineage truncation, join-on-src +
+  groupBy-dst rounds — O(E) per round.
 
 Oracle: DuckDB runs the IDENTICAL extraction (decode(blob) +
 regexp_extract_all group 1) and the same fixed-point rounds as
-iterative CTEs, so values match bit-for-bit.
+unrolled CTEs from the one generator components.sql_pagerank_ctes, so
+values match bit-for-bit.
 """
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .components import PR_ITERS, PR_BASE, PR_SCALE, pagerank_fixed_point
+from .components import PR_ITERS, pagerank_fixed_point, sql_pagerank_ctes
+
+# The variant names callers resolve, bound to the one body: weighting
+# comes from the input's `w` column, so only dangling is bound.
+pagerank_weighted_fixed_point = pagerank_fixed_point
+pagerank_dangling_fixed_point = partial(pagerank_fixed_point, dangling=True)
+pagerank_weighted_dangling_fixed_point = pagerank_dangling_fixed_point
 
 # group 1 of the href attribute; the same pattern string runs in both
 # engines (Spark regexp_extract_all and DuckDB regexp_extract_all)
@@ -119,29 +131,6 @@ _SQL_E = f"""e AS (
   WHERE dst LIKE '{_INTERNAL_PREFIX}%' AND src <> dst)"""
 
 
-def _sql_pr_ctes() -> str:
-    """nodes/od/r0 + the unrolled fixed-point rounds over `edges`;
-    the final relation is r{PR_ITERS}."""
-    steps = []
-    for i in range(PR_ITERS):
-        steps.append(f"""
-s{i + 1} AS (
-  SELECT e.dst, sum(r{i}.r // od.deg) AS s
-  FROM edges e
-  JOIN r{i} ON r{i}.node = e.src
-  JOIN od ON od.src = e.src
-  GROUP BY e.dst),
-r{i + 1} AS (
-  SELECT n.node,
-         CAST({PR_BASE} + (85 * coalesce(s{i + 1}.s, 0)) // 100 AS BIGINT)
-           AS r
-  FROM nodes n LEFT JOIN s{i + 1} ON s{i + 1}.dst = n.node)""")
-    return f"""nodes AS (SELECT DISTINCT src AS node FROM edges),
-od AS (SELECT src, count(*) AS deg FROM edges GROUP BY src),
-r0 AS (SELECT node, CAST({PR_SCALE} AS BIGINT) AS r FROM nodes),
-{",".join(steps)}"""
-
-
 def q_web_link_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank over the INTERNAL document graph (crawl-local edges;
     external asset hosts are sinks the crawl doesn't rank)."""
@@ -155,55 +144,20 @@ def sql_web_link_pagerank() -> str:
     return f"""
 WITH {_sql_hrefs()},
 {_SQL_EDGES},
-{_sql_pr_ctes()}
+{sql_pagerank_ctes()}
 SELECT node AS url, r AS rank_fp FROM r{PR_ITERS}"""
 
 
-def pagerank_weighted_fixed_point(
-    edges: DataFrame, iters: int = PR_ITERS
-) -> DataFrame:
-    """edges(src, dst, w) with INTEGER weights -> (node, rank_fp):
-    weighted PageRank, damping 0.85 — rank flows proportional to edge
-    weight (r * w div out_weight, integer-exact cross-engine).
-
-    The production form for dense sites: q_web_link_pagerank preserves
-    multiplicity as duplicate edge rows, so a page linking a target
-    50x ships 50 rows through every per-round shuffle; folding
-    multiplicity into n_links first makes the per-round volume
-    DISTINCT-edge-grain (~halves it on template-heavy sites) while
-    keeping the same mass semantics. Not bit-identical to the
-    duplicate-row form (r*w div ow vs summing w copies of r div ow —
-    integer division rounds once vs w times), hence its own oracle."""
-    edges = edges.localCheckpoint()
-    nodes = edges.select(F.col("src").alias("node")).distinct()
-    ow = edges.groupBy("src").agg(F.sum("w").alias("ow"))
-    ranks = nodes.withColumn("r", F.lit(PR_SCALE).cast("long"))
-    for _ in range(iters):
-        contrib = (
-            edges.join(ranks, edges["src"] == ranks["node"])
-            .join(ow, "src")
-            .select(F.col("dst"), F.expr("r * w div ow").alias("c"))
-        )
-        summed = contrib.groupBy("dst").agg(F.sum("c").alias("s"))
-        ranks = (
-            nodes.join(summed, nodes["node"] == summed["dst"], "left")
-            .select(
-                "node",
-                (
-                    F.lit(PR_BASE)
-                    + F.expr("(85 * coalesce(s, 0)) div 100")
-                ).cast("long").alias("r"),
-            )
-            .localCheckpoint()  # truncate lineage per round
-        )
-    return ranks.select("node", F.col("r").alias("rank_fp"))
-
-
 def q_web_pagerank_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """q_web_link_pagerank with multiplicity folded into the weight
+    w = n_links before the loop, so each round shuffles distinct edges
+    rather than every href occurrence. Not bit-identical to the
+    duplicate-row form (one integer division per edge instead of w),
+    hence its own oracle."""
     lg = link_graph(_fixture_pages(spark)).where(
         F.col("dst_url").startswith(_INTERNAL_PREFIX)
     )
-    return pagerank_weighted_fixed_point(
+    return pagerank_fixed_point(
         lg.select(
             F.col("src_url").alias("src"),
             F.col("dst_url").alias("dst"),
@@ -213,88 +167,14 @@ def q_web_pagerank_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def sql_web_pagerank_weighted() -> str:
-    steps = []
-    for i in range(PR_ITERS):
-        steps.append(f"""
-s{i + 1} AS (
-  SELECT e.dst, sum(r{i}.r * e.w // ow.ow) AS s
-  FROM we e
-  JOIN r{i} ON r{i}.node = e.src
-  JOIN ow ON ow.src = e.src
-  GROUP BY e.dst),
-r{i + 1} AS (
-  SELECT n.node,
-         CAST({PR_BASE} + (85 * coalesce(s{i + 1}.s, 0)) // 100 AS BIGINT)
-           AS r
-  FROM nodes n LEFT JOIN s{i + 1} ON s{i + 1}.dst = n.node)""")
     return f"""
 WITH {_sql_hrefs()},
 we AS (
   SELECT src, dst, count(*) AS w FROM hrefs
   WHERE dst LIKE '{_INTERNAL_PREFIX}%'
   GROUP BY src, dst),
-nodes AS (SELECT DISTINCT src AS node FROM we),
-ow AS (SELECT src, CAST(sum(w) AS BIGINT) AS ow FROM we GROUP BY src),
-r0 AS (SELECT node, CAST({PR_SCALE} AS BIGINT) AS r FROM nodes),
-{",".join(steps)}
+{sql_pagerank_ctes("we", weighted=True)}
 SELECT node AS url, r AS rank_fp FROM r{PR_ITERS}"""
-
-
-def pagerank_dangling_fixed_point(
-    edges: DataFrame, iters: int = PR_ITERS
-) -> DataFrame:
-    """Full-graph PageRank with DANGLING-mass redistribution: nodes
-    are src ∪ dst, and a node with no outlinks (an asset URL, a
-    PDF, an uncrawled target) donates its rank equally to every node
-    each round — the textbook correction q_web_link_pagerank skips by
-    ranking only crawl-internal sources. Integer fixed-point: the
-    dangling sum D is a 1-row agg broadcast into the update, each
-    node receives D div N (remainder dropped — deterministic,
-    mirrored in SQL), so rounds stay cross-engine exact. Cost per
-    round: the same edge-grain join + groupBy, plus one scalar agg
-    over the sink nodes."""
-    edges = edges.localCheckpoint()
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .unionAll(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
-    n_nodes = nodes.count()  # plan constant (1 driver scalar)
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    sinks = nodes.join(
-        edges.select("src").distinct(),
-        nodes["node"] == F.col("src"),
-        "left_anti",
-    )
-    ranks = nodes.withColumn("r", F.lit(PR_SCALE).cast("long"))
-    for _ in range(iters):
-        dangling = (
-            ranks.join(sinks.select("node"), "node", "left_semi")
-            .agg(F.coalesce(F.sum("r"), F.lit(0)).alias("_d"))
-        )
-        contrib = (
-            edges.join(ranks, edges["src"] == ranks["node"])
-            .join(deg, "src")
-            .select(F.col("dst"), F.expr("r div deg").alias("c"))
-        )
-        summed = contrib.groupBy("dst").agg(F.sum("c").alias("s"))
-        ranks = (
-            nodes.join(summed, nodes["node"] == summed["dst"], "left")
-            .crossJoin(F.broadcast(dangling))
-            .select(
-                "node",
-                (
-                    F.lit(PR_BASE)
-                    + F.expr(
-                        f"(85 * (coalesce(s, 0) + _d div {n_nodes}))"
-                        " div 100"
-                    )
-                ).cast("long").alias("r"),
-            )
-            .localCheckpoint()
-        )
-    return ranks.select("node", F.col("r").alias("rank_fp"))
 
 
 def q_web_pagerank_dangling(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -303,100 +183,17 @@ def q_web_pagerank_dangling(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = extract_outlinks(_fixture_pages(spark)).select(
         F.col("src_url").alias("src"), F.col("dst_url").alias("dst")
     )
-    return pagerank_dangling_fixed_point(edges).withColumnRenamed(
+    return pagerank_fixed_point(edges, dangling=True).withColumnRenamed(
         "node", "url"
     )
 
 
 def sql_web_pagerank_dangling() -> str:
-    steps = []
-    for i in range(PR_ITERS):
-        steps.append(f"""
-d{i} AS (
-  SELECT coalesce(sum(r), 0) AS d FROM r{i}
-  WHERE NOT EXISTS (SELECT 1 FROM od WHERE od.src = r{i}.node)),
-s{i + 1} AS (
-  SELECT e.dst, sum(r{i}.r // od.deg) AS s
-  FROM edges e
-  JOIN r{i} ON r{i}.node = e.src
-  JOIN od ON od.src = e.src
-  GROUP BY e.dst),
-r{i + 1} AS (
-  SELECT n.node,
-         CAST({PR_BASE} + (85 * (coalesce(s{i + 1}.s, 0)
-                + (SELECT d FROM d{i}) // (SELECT n FROM nn)))
-              // 100 AS BIGINT) AS r
-  FROM nodes n LEFT JOIN s{i + 1} ON s{i + 1}.dst = n.node)""")
     return f"""
 WITH {_sql_hrefs()},
 edges AS (SELECT src, dst FROM hrefs),
-nodes AS (
-  SELECT DISTINCT node FROM (
-    SELECT src AS node FROM edges UNION ALL SELECT dst FROM edges)),
-nn AS (SELECT count(*) AS n FROM nodes),
-od AS (SELECT src, count(*) AS deg FROM edges GROUP BY src),
-r0 AS (SELECT node, CAST({PR_SCALE} AS BIGINT) AS r FROM nodes),
-{",".join(steps)}
+{sql_pagerank_ctes(dangling=True)}
 SELECT node AS url, r AS rank_fp FROM r{PR_ITERS}"""
-
-
-def pagerank_weighted_dangling_fixed_point(
-    edges: DataFrame, iters: int = PR_ITERS
-) -> DataFrame:
-    """edges(src, dst, w), INTEGER weights -> (node, rank_fp): weighted
-    PageRank over the FULL node set (src ∪ dst) with dangling-mass
-    redistribution — the Common-Crawl host-rank artifact (hosts that
-    only ever appear as link targets are genuine sinks whose mass must
-    be recycled, and inter-host multiplicity is enormous so edges must
-    be weight-collapsed, never duplicate rows).
-
-    Integer fixed-point throughout (r * w div ow per edge, the 1-row
-    dangling sum D broadcast and each node credited D div N), so both
-    engines compute bit-identical scores. Per round: one weighted-edge
-    join + groupBy (distinct-edge-grain, the minimum) plus a scalar
-    agg over the sinks."""
-    edges = edges.localCheckpoint()
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .unionAll(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
-    n_nodes = nodes.count()  # plan constant (1 driver scalar)
-    ow = edges.groupBy("src").agg(F.sum("w").alias("ow"))
-    sinks = nodes.join(
-        edges.select("src").distinct(),
-        nodes["node"] == F.col("src"),
-        "left_anti",
-    )
-    ranks = nodes.withColumn("r", F.lit(PR_SCALE).cast("long"))
-    for _ in range(iters):
-        dangling = (
-            ranks.join(sinks.select("node"), "node", "left_semi")
-            .agg(F.coalesce(F.sum("r"), F.lit(0)).alias("_d"))
-        )
-        contrib = (
-            edges.join(ranks, edges["src"] == ranks["node"])
-            .join(ow, "src")
-            .select(F.col("dst"), F.expr("r * w div ow").alias("c"))
-        )
-        summed = contrib.groupBy("dst").agg(F.sum("c").alias("s"))
-        ranks = (
-            nodes.join(summed, nodes["node"] == summed["dst"], "left")
-            .crossJoin(F.broadcast(dangling))
-            .select(
-                "node",
-                (
-                    F.lit(PR_BASE)
-                    + F.expr(
-                        f"(85 * (coalesce(s, 0) + _d div {n_nodes}))"
-                        " div 100"
-                    )
-                ).cast("long").alias("r"),
-            )
-            .localCheckpoint()
-        )
-    return ranks.select("node", F.col("r").alias("rank_fp"))
 
 
 def q_web_host_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -415,30 +212,12 @@ def q_web_host_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("src", "dst")
         .agg(F.count(F.lit(1)).alias("w"))
     )
-    return pagerank_weighted_dangling_fixed_point(we).withColumnRenamed(
+    return pagerank_fixed_point(we, dangling=True).withColumnRenamed(
         "node", "host"
     )
 
 
 def sql_web_host_rank() -> str:
-    steps = []
-    for i in range(PR_ITERS):
-        steps.append(f"""
-d{i} AS (
-  SELECT coalesce(sum(r), 0) AS d FROM r{i}
-  WHERE NOT EXISTS (SELECT 1 FROM ow WHERE ow.src = r{i}.node)),
-s{i + 1} AS (
-  SELECT e.dst, sum(r{i}.r * e.w // ow.ow) AS s
-  FROM we e
-  JOIN r{i} ON r{i}.node = e.src
-  JOIN ow ON ow.src = e.src
-  GROUP BY e.dst),
-r{i + 1} AS (
-  SELECT n.node,
-         CAST({PR_BASE} + (85 * (coalesce(s{i + 1}.s, 0)
-                + (SELECT d FROM d{i}) // (SELECT n FROM nn)))
-              // 100 AS BIGINT) AS r
-  FROM nodes n LEFT JOIN s{i + 1} ON s{i + 1}.dst = n.node)""")
     return f"""
 WITH {_sql_hrefs()},
 hp AS (
@@ -448,13 +227,7 @@ hp AS (
 we AS (
   SELECT src, dst, count(*) AS w FROM hp
   WHERE src <> dst GROUP BY src, dst),
-nodes AS (
-  SELECT DISTINCT node FROM (
-    SELECT src AS node FROM we UNION ALL SELECT dst FROM we)),
-nn AS (SELECT count(*) AS n FROM nodes),
-ow AS (SELECT src, CAST(sum(w) AS BIGINT) AS ow FROM we GROUP BY src),
-r0 AS (SELECT node, CAST({PR_SCALE} AS BIGINT) AS r FROM nodes),
-{",".join(steps)}
+{sql_pagerank_ctes("we", weighted=True, dangling=True)}
 SELECT node AS host, r AS rank_fp FROM r{PR_ITERS}"""
 
 
@@ -837,7 +610,7 @@ def sql_crawl_frontier() -> str:
     return f"""
 WITH {_sql_hrefs()},
 {_SQL_EDGES},
-{_sql_pr_ctes()},
+{sql_pagerank_ctes()},
 frontier AS (
   SELECT h.src, h.dst FROM hrefs h
   WHERE NOT EXISTS (
@@ -1004,7 +777,7 @@ def sql_crawl_frontier_polite() -> str:
     return f"""
 WITH {_sql_hrefs()},
 {_SQL_EDGES},
-{_sql_pr_ctes()},
+{sql_pagerank_ctes()},
 frontier AS (
   SELECT h.src, h.dst FROM hrefs h
   WHERE NOT EXISTS (

@@ -90,23 +90,6 @@ class GazetteerTagger:
         return BatchMatcher(self._index)
 
 
-def _sentences_from_pages(pdf: pd.DataFrame, text_col: str) -> pd.DataFrame:
-    """Pandas-side segmentation + explode for one Arrow batch."""
-    sents = webtext.split_sentences(pdf[text_col])
-    lens = sents.str.len().fillna(0).astype(int)
-    out = pd.DataFrame(
-        {
-            "url": pdf["url"].repeat(lens).to_numpy(),
-            "warc_ts": pdf["warc_ts"].repeat(lens).to_numpy()
-            if "warc_ts" in pdf
-            else None,
-            "sentence": [s for lst in sents for s in lst],
-        }
-    )
-    out["sent_idx"] = [i for lst in sents for i in range(len(lst))]
-    return out
-
-
 def _pairs_per_sentence(norm: pd.Series, tagger) -> pd.DataFrame:
     """Generic (model-tagger) path: tag -> mentions_from_word_iob ->
     positional pairing.

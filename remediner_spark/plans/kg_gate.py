@@ -346,7 +346,7 @@ def _shingle_sql(col: str) -> str:
 
 def _mh_cols_sql() -> str:
     """The K = bands*rows min-hash columns over an ``sh`` shingle list —
-    mirrors linking.minhash_signature (md5-prefix LCG family)."""
+    mirrors linking.minhash_from_base over md5-prefix base hashes."""
     h = md5_hash32_sql("s")
     return ", ".join(
         f"list_aggregate(list_transform(sh, s -> "

@@ -16,9 +16,10 @@ raw rows (the exchange carries only the input bytes — cheap by
 construction, since the trigger condition bounds them at
 cores x maxPartitionBytes). At production scale the input produces
 plenty of splits and this is a no-op — the floor is scale-adaptive,
-not a local[32] constant (guide §6.1: `spark.sql.files.minPartitionNum`
-is the same idea, but byte-range splits cannot divide a single-row-
-group file, so the floor must be an explicit shuffle here).
+not a local[32] constant (`spark.sql.files.minPartitionNum` is the
+same idea, but byte-range splits cannot divide a single-row-group
+file, so the floor must be an explicit shuffle here). Only inputs
+sized locally get the floor; any other path keeps the plain scan.
 """
 
 from __future__ import annotations
@@ -30,7 +31,9 @@ from pyspark.sql import DataFrame, SparkSession
 _DEFAULT_MAX_SPLIT = 128 * 1024 * 1024
 
 
-def _input_bytes(path: str) -> int:
+def _input_bytes(path: str) -> int | None:
+    """Local size of the input, or None when os.path cannot size it
+    (a URI such as s3a://, hdfs:// or file://, or a missing path)."""
     if os.path.isdir(path):
         total = 0
         for root, _dirs, files in os.walk(path):
@@ -44,7 +47,7 @@ def _input_bytes(path: str) -> int:
     try:
         return os.path.getsize(path)
     except OSError:
-        return 0
+        return None
 
 
 def _max_split_bytes(spark: SparkSession) -> int:
@@ -64,10 +67,16 @@ def scan_parquet(spark: SparkSession, path: str) -> DataFrame:
     (documents / embeddings expression chains). The repartition keeps
     results identical for every consumer in this repo: no operator
     depends on partition ids or row order (aggregations order
-    explicitly; floats are rounded inside the queries)."""
+    explicitly; floats are rounded inside the queries).
+
+    Fails closed: an input of unknown size keeps the plain scan — a
+    production-scale table must never be round-robin shuffled whole
+    because its size could not be read."""
     df = spark.read.parquet(path)
-    target = spark.sparkContext.defaultParallelism
     nbytes = _input_bytes(path)
+    if nbytes is None:
+        return df
+    target = spark.sparkContext.defaultParallelism
     est_splits = max(1, nbytes // _max_split_bytes(spark))
     if est_splits < target:
         df = df.repartition(target)

@@ -327,15 +327,37 @@ def _field_id(field: dict):
     return (field.get("metadata") or {}).get("field_id")
 
 
+def _nullable_json(t):
+    """A schema-json type value with every nested null flag set."""
+    if isinstance(t, list):
+        return [_nullable_json(x) for x in t]
+    if not isinstance(t, dict):
+        return t
+    return {
+        k: True
+        if k in ("nullable", "containsNull", "valueContainsNull")
+        else _nullable_json(v)
+        for k, v in t.items()
+    }
+
+
 def _datatype_from_json(t):
-    """Spark DataType from a schema-json type value (str or dict)."""
+    """Spark DataType from a schema-json type value (str or dict), in
+    its nullable form: a parquet read returns nullable array elements,
+    map values and struct fields whatever the write recorded, and Spark
+    refuses to cast those to a non-nullable form."""
     from pyspark.sql.types import StructType
 
     return StructType.fromJson(
         {
             "type": "struct",
             "fields": [
-                {"name": "x", "type": t, "nullable": True, "metadata": {}}
+                {
+                    "name": "x",
+                    "type": _nullable_json(t),
+                    "nullable": True,
+                    "metadata": {},
+                }
             ],
         }
     ).fields[0].dataType

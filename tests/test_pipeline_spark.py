@@ -89,3 +89,24 @@ def test_tag_sentences_stage(spark, pages_df, tagger_bc):
     assert row is not None
     assert len(row["words"]) == len(row["iob"])
     assert "DRUG" in row["masked_text"]
+
+
+def test_run_pipeline_checkpointed_smoke(spark, tmp_path, tagger_bc):
+    """plans.pipeline.run_pipeline returns on a small corpus, and the
+    edge count it reports is the row count of the data files its edge
+    table holds (read straight from parquet, not through read_table)."""
+    from remediner_spark.plans.pipeline import run_pipeline
+    from remediner_spark.sources.corpus import write_corpus
+    from remediner_spark.sources.table import live_files
+
+    corpus = str(tmp_path / "corpus")
+    write_corpus(corpus, n_pages=60)
+    out = str(tmp_path / "out")
+    m = run_pipeline(
+        spark, corpus, out, tagger_bc, checkpoint=True, n_buckets=4
+    )
+    files = [f["path"] for f in live_files(f"{out}/edges")]
+    written = spark.read.parquet(*files).count()
+    assert written > 0
+    assert m["n_edges"] == written
+    assert m["n_nodes"] > 0 and m["n_triples"] > 0

@@ -2426,3 +2426,20 @@ class TestMigrateLegacyFiles:
         # legacy-spec and migrates along with the base files
         assert s["properties"]["migrated_files"] >= 2
         assert s["properties"]["carried_files"] == 0
+
+
+def test_array_of_non_null_elements_round_trips(spark, tmp_path):
+    """An array column recorded with containsNull=false (what
+    graph.build_edges writes for sample_urls) reads back: the parquet
+    read returns nullable elements and the field-id projection must not
+    cast them to the non-nullable recorded type."""
+    from pyspark.sql import functions as F
+
+    path = str(tmp_path / "t")
+    df = spark.createDataFrame(
+        [(1, "a,b"), (2, "c"), (3, "d,e,f")], "id int, s string"
+    ).select("id", F.split("s", ",").alias("urls"))
+    assert df.schema["urls"].dataType.containsNull is False
+    write_table(df, path)
+    got = {r["id"]: r["urls"] for r in read_table(spark, path).collect()}
+    assert got == {1: ["a", "b"], 2: ["c"], 3: ["d", "e", "f"]}
